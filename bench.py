@@ -20,10 +20,14 @@ the suspect.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
+import threading
 import time
+
+from pyspark.sql.streaming import StreamingQueryListener
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -385,6 +389,60 @@ def adjudicate_streaming(rates: dict, band_qs: dict, rerun) -> dict:
     return reg
 
 
+#: how long a replay's listener events may lag its return
+_DRAIN_S = 60.0
+
+
+class _InputRowCounter(StreamingQueryListener):
+    """Sums ``numInputRows`` over the progress events of the streaming
+    queries started while it is registered."""
+
+    def __init__(self) -> None:
+        self._cv = threading.Condition()
+        # runIds started while registered and not yet terminated; a
+        # query's progress events all precede its termination
+        self._live: set = set()
+        self.rows = 0
+
+    def onQueryStarted(self, event) -> None:
+        with self._cv:
+            self._live.add(event.runId)
+
+    def onQueryProgress(self, event) -> None:
+        with self._cv:
+            if event.progress.runId in self._live:
+                self.rows += event.progress.numInputRows
+
+    def onQueryTerminated(self, event) -> None:
+        with self._cv:
+            self._live.discard(event.runId)
+            self._cv.notify_all()
+
+    def wait_drained(self) -> None:
+        """Block until every started query's termination event arrived.
+        Starts are delivered synchronously with ``start()``; progress
+        and termination arrive later on the listener bus."""
+        with self._cv:
+            if not self._cv.wait_for(lambda: not self._live, _DRAIN_S):
+                raise TimeoutError(
+                    f"{len(self._live)} streaming queries still "
+                    f"unreported after {_DRAIN_S}s"
+                )
+
+
+@contextlib.contextmanager
+def counted_input_rows(spark):
+    """Count the rows every streaming query run inside the block reads:
+    yields a counter whose ``rows`` is complete once the block exits."""
+    counter = _InputRowCounter()
+    spark.streams.addListener(counter)
+    try:
+        yield counter
+        counter.wait_drained()
+    finally:
+        spark.streams.removeListener(counter)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from weather_analysis_bigdata__spark.registry import all_queries
@@ -450,18 +508,18 @@ def main() -> None:
 
     # Streaming replay throughput (round-3 verdict item 9): the replay
     # queries are correctness-gated but published no rows/s, so
-    # streaming regressions were invisible. Input volume = the events
-    # rows each replay pushes through the engine (the dedup replay
-    # additionally re-delivers the event_id % 10 == 0 slice).
+    # streaming regressions were invisible. Input volume = the rows the
+    # streaming sources deliver during the call: numInputRows summed
+    # over every query the replay runs, so it follows each replay's
+    # source. numInputRows counts a row once per scan of the source in
+    # the plan: the segment-replay harness persists each micro-batch,
+    # so its replays count every staged row once; the interval joins
+    # read their one event source on both join sides and count it
+    # twice — fixed plan structure, so their rates stay comparable
+    # run to run.
     streaming = {}
     streaming_error = None
     try:
-        ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        events_rows = ev.count()
-        redelivered = ev.filter("event_id % 10 = 0").count()
-        docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        docs_rows = docs.count()
-        router_batch_rows = docs.filter("doc_id % 50 < 2").count()
         stream_names = [
             n for n in registry if n.startswith("streaming_")
         ]
@@ -469,73 +527,12 @@ def main() -> None:
             prep = registry[name].prepare
             if prep is not None:
                 prep(spark, sf_dir)
-            if name in (
-                "streaming_minhash_index_replay",
-                # these gate/score the documents table as the stream
-                "streaming_quality_gate_replay",
-                "streaming_classifier_gate_replay",
-            ):
-                n_in = docs_rows  # documents stream, not events
-            elif name == "streaming_multimodal_router_replay":
-                # streams the synthesized arriving batch: the two
-                # doc_id % 50 slices (see queries_round5._router_batch_df)
-                n_in = router_batch_rows
-            elif name == "streaming_decontaminate_semantic_replay":
-                # streams the eval query set: organic eval vectors plus
-                # the planted paraphrases (queries_round8._decon_qset)
-                emb = spark.read.parquet(
-                    os.path.join(sf_dir, "embeddings.parquet")
-                )
-                n_in = (
-                    emb.filter("vec_id % 97 = 0").count()
-                    + emb.filter(
-                        "vec_id % 97 <> 0 AND vec_id % 250 = 1"
-                    ).count()
-                )
-            elif name == "streaming_embedding_pca_score_replay":
-                # streams the full embeddings table in 3 slices
-                n_in = spark.read.parquet(
-                    os.path.join(sf_dir, "embeddings.parquet")
-                ).count()
-            elif name == "streaming_embedding_pca_update_replay":
-                # streams the arriving fifth (queries_round9._PCA_UP_DELTA)
-                n_in = (
-                    spark.read.parquet(
-                        os.path.join(sf_dir, "embeddings.parquet")
-                    )
-                    .filter("vec_id % 5 = 4")
-                    .count()
-                )
-            elif name == "streaming_cc_incremental_replay":
-                # streams the arriving shard (queries_round9._cci_batch_df:
-                # resubmissions + suffixed novels + 3 planted literals)
-                n_in = (
-                    docs.filter("doc_id % 40 = 9").count()
-                    + docs.filter("doc_id % 40 = 19").count()
-                    + 3
-                )
-            elif name in (
-                "streaming_paragraph_dedup_replay",
-                "streaming_drift_monitor_replay",
-                "streaming_drift_gate_replay",
-                "streaming_span_dedup_replay",
-            ):
-                # streams the three planted slices of
-                # queries_hygiene._paragraph_batch (union, overlaps
-                # re-counted — each slice is its own arriving doc)
-                n_in = (
-                    docs.filter("doc_id % 7 = 3").count()
-                    + docs.filter("doc_id % 13 = 1").count()
-                    + docs.filter("doc_id % 11 = 5").count()
-                )
-            else:
-                n_in = events_rows + (
-                    redelivered if name == "streaming_dedup_replay" else 0
-                )
-            t0 = time.time()
-            df = registry[name].fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            wall = time.time() - t0
+            with counted_input_rows(spark) as counted:
+                t0 = time.time()
+                df = registry[name].fn(spark, sf_dir)
+                df.write.format("noop").mode("overwrite").save()
+                wall = time.time() - t0
+            n_in = counted.rows
             streaming[name] = {
                 "wall_sec": round(wall, 3),
                 "input_rows": n_in,
@@ -551,45 +548,20 @@ def main() -> None:
     # foreachBatch planning, segment commit), not compute — publish
     # that floor so a compute regression inside a replay stays visible
     # above the constant, and so the judge can subtract the machinery
-    # when reading replay walls. The probe replays the same shape the
-    # real replays use — 4-file availableNow source, one file per
-    # trigger, foreachBatch publishing a parquet segment per batch —
-    # over 4 single-row batches, so its wall IS the per-replay fixed
-    # cost (≈ 4 triggers + 4 tiny segment writes + stream start/stop).
+    # when reading replay walls. The probe runs the shared segment-
+    # replay harness (streaming/replay.py) with an identity kernel over
+    # 4 single-row batches, so its wall IS the per-replay fixed cost
+    # (source staging + ≈ 4 triggers + 4 tiny segment writes + stream
+    # start/stop).
     replay_floor = None
     try:
-        import shutil
-        import tempfile
+        from weather_analysis_bigdata__spark.streaming.replay import (
+            replay_segments,
+        )
 
-        src = tempfile.mkdtemp(prefix="bench_floor_src_")
-        seg = tempfile.mkdtemp(prefix="bench_floor_seg_")
-        try:
-            spark.range(4).repartition(4).write.mode("overwrite").parquet(
-                src
-            )
-            floor_schema = spark.read.parquet(src).schema
-            t0 = time.time()
-            stream = (
-                spark.readStream.schema(floor_schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-
-            def _publish_floor(bdf, batch_id: int) -> None:
-                bdf.write.mode("overwrite").parquet(
-                    os.path.join(seg, f"seg_{batch_id}")
-                )
-
-            q = (
-                stream.writeStream.foreachBatch(_publish_floor)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            replay_floor = round(time.time() - t0, 3)
-        finally:
-            shutil.rmtree(src, ignore_errors=True)
-            shutil.rmtree(seg, ignore_errors=True)
+        t0 = time.time()
+        replay_segments(spark, spark.range(4), lambda bdf, _: bdf, "bench_floor")
+        replay_floor = round(time.time() - t0, 3)
     except Exception:
         replay_floor = None
     # Full detail (incl. per-query cold/JIT times) goes to a file; the

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 
 def test_sketch_aggs_error_bounds(spark, sf_dir):
     from weather_analysis_bigdata__spark.registry import all_queries
@@ -32,3 +34,21 @@ def test_gapfill_spine_dense_and_fill_total(spark, sf_dir):
     for series in by_user.values():
         days = sorted(r.day for r in series)
         assert len(days) == (days[-1] - days[0]).days + 1  # dense, no dups
+
+
+def test_revenue_partials_rejects_null_key(spark):
+    """A null group key must trip loudly: dictionary encoding gives it a
+    null index, which the int64 key arithmetic would turn into a
+    garbage group. The non-null rows alone aggregate exactly."""
+    from weather_analysis_bigdata__spark.functions.moneyops import (
+        revenue_partials,
+    )
+
+    df = spark.createDataFrame(
+        [("A", 10.0, 0.05), (None, 5.0, 0.0), ("A", 2.5, 0.1)],
+        "k string, l_extendedprice double, l_discount double",
+    ).coalesce(1)
+    with pytest.raises(Exception, match="null key column 'k'"):
+        revenue_partials(df, ["k"]).collect()
+    (row,) = revenue_partials(df.filter("k IS NOT NULL"), ["k"]).collect()
+    assert (row.k, row.rev4, row.cnt) == ("A", 1000 * 95 + 250 * 90, 2)

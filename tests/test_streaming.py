@@ -16,9 +16,18 @@ from pyspark.sql import types as T
 
 def test_tumbling_replay_equals_batch(spark, sf_dir):
     from weather_analysis_bigdata__spark.sources.files import load_table
-    from weather_analysis_bigdata__spark.streaming.windows import replay_to_memory
+    from weather_analysis_bigdata__spark.streaming.windows import (
+        replay_build_to_memory,
+        tumbling_agg,
+        tumbling_agg_schema,
+    )
 
-    streamed = replay_to_memory(spark, os.path.join(sf_dir, "events.parquet"))
+    streamed = replay_build_to_memory(
+        spark,
+        os.path.join(sf_dir, "events.parquet"),
+        tumbling_agg,
+        tumbling_agg_schema(),
+    )
     batch = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")

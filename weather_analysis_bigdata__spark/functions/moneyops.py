@@ -59,9 +59,15 @@ def revenue_partials(df: DataFrame, keys: list[str]) -> DataFrame:
             dicts = []
             combined = None
             for k in keys:
-                col = pc.dictionary_encode(
-                    b.column(b.schema.get_field_index(k))
-                )
+                key_col = b.column(b.schema.get_field_index(k))
+                # a null key dictionary-encodes to a null index, which
+                # the int64 cast below turns into a garbage group id
+                if key_col.null_count:
+                    raise ValueError(
+                        f"revenue_partials: null key column {k!r} "
+                        "(non-null contract)"
+                    )
+                col = pc.dictionary_encode(key_col)
                 idx = col.indices.to_numpy(zero_copy_only=False).astype(
                     np.int64
                 )

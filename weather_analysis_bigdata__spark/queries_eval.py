@@ -56,6 +56,7 @@ from weather_analysis_bigdata__spark.functions.textops import (
 )
 from weather_analysis_bigdata__spark.registry import register
 from weather_analysis_bigdata__spark.sources.files import load_table
+from weather_analysis_bigdata__spark.streaming.replay import replay_segments
 
 # ---------------------------------------------------------------------------
 # Hashed char-trigram Naive Bayes language classifier
@@ -1129,51 +1130,17 @@ def quality_ensemble_vote_5way(
 def streaming_classifier_gate_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    from weather_analysis_bigdata__spark.operators.index_store import (
-        read_replay_segments,
-        replay_segment_dir,
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "text"
     )
-
-    run = uuid.uuid4().hex[:10]
-    src_dir = tempfile.mkdtemp(prefix=f"clfgate_src_{run}_")
-    # Segments outlive this function — the result IS their scan.
-    seg_dir = replay_segment_dir("clfgate_seg")
-    try:
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "source", "text"
-        )
-        schema = docs.schema
-        docs.repartition(4).write.mode("overwrite").parquet(src_dir)
-        lpt = _qnb_table(spark, sf_dir)
-        priors = _qnb_priors(lpt)
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-
-        def publish(bdf: DataFrame, batch_id: int) -> None:
-            qnb_score_docs(bdf, lpt, priors).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(seg_dir, f"seg_{batch_id}"))
-
-        q = (
-            stream.writeStream.foreachBatch(publish)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-        # Distributed scan of the published segments — no collect().
-        return read_replay_segments(spark, seg_dir)
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
+    lpt = _qnb_table(spark, sf_dir)
+    priors = _qnb_priors(lpt)
+    return replay_segments(
+        spark,
+        docs,
+        lambda bdf, _: qnb_score_docs(bdf, lpt, priors),
+        "clfgate",
+    )
 
 
 # ---------------------------------------------------------------------------

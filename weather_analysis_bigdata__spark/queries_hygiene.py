@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from weather_analysis_bigdata__spark.registry import register
 from weather_analysis_bigdata__spark.session import pin
 from weather_analysis_bigdata__spark.sources.files import load_table
+from weather_analysis_bigdata__spark.streaming.replay import replay_segments
 from weather_analysis_bigdata__spark.functions.distributed import (
     two_pass_ordinals,
     two_pass_prefix_sum,
@@ -395,48 +396,13 @@ def dedup_paragraph_incremental(
 def streaming_paragraph_dedup_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    from weather_analysis_bigdata__spark.operators.index_store import (
-        read_replay_segments,
-        replay_segment_dir,
+    idx = _paragraph_index(spark, sf_dir)
+    return replay_segments(
+        spark,
+        _paragraph_batch(spark, sf_dir),
+        lambda bdf, _: _incremental_decisions(bdf, idx),
+        "paradedup",
     )
-
-    run = uuid.uuid4().hex[:10]
-    src_dir = tempfile.mkdtemp(prefix=f"paradedup_src_{run}_")
-    # Segments outlive this function — the result IS their scan.
-    seg_dir = replay_segment_dir("paradedup_seg")
-    try:
-        batch = _paragraph_batch(spark, sf_dir)
-        schema = batch.schema
-        batch.repartition(4).write.mode("overwrite").parquet(src_dir)
-        idx = _paragraph_index(spark, sf_dir)
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-
-        def publish(bdf: DataFrame, batch_id: int) -> None:
-            _incremental_decisions(bdf, idx).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(seg_dir, f"seg_{batch_id}"))
-
-        q = (
-            stream.writeStream.foreachBatch(publish)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-        # Distributed scan of the published segments — no collect().
-        return read_replay_segments(spark, seg_dir)
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2055,60 +2021,12 @@ def _drift_replay_oracle() -> str:
 def streaming_drift_monitor_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    from weather_analysis_bigdata__spark.operators.index_store import (
-        read_replay_segments,
-        replay_segment_dir,
+    cshares = _drift_index(spark, sf_dir)
+    return replay_segments(
+        spark,
+        _paragraph_batch_slices(spark, sf_dir),
+        lambda bdf, batch_id: _drift_tv_summary(bdf, cshares).select(
+            F.lit(batch_id).cast("long").alias("batch_id"), "*"
+        ),
+        "driftmon",
     )
-
-    run = uuid.uuid4().hex[:10]
-    src_dir = tempfile.mkdtemp(prefix=f"driftmon_src_{run}_")
-    stage_dir = tempfile.mkdtemp(prefix=f"driftmon_stage_{run}_")
-    seg_dir = replay_segment_dir("driftmon_seg")
-    try:
-        slices = _paragraph_batch_slices(spark, sf_dir)
-        schema = slices[0].schema
-        # one FILE per slice, mtimes strictly increasing so the file
-        # stream delivers slice i as micro-batch i (FileStreamSource
-        # orders by modification time, oldest first)
-        for i, sl in enumerate(slices):
-            d = os.path.join(stage_dir, f"s{i}")
-            sl.coalesce(1).write.mode("overwrite").parquet(d)
-            part = next(
-                f for f in os.listdir(d)
-                if f.startswith("part-") and f.endswith(".parquet")
-            )
-            dst = os.path.join(src_dir, f"{i:03d}.parquet")
-            shutil.copy(os.path.join(d, part), dst)
-            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-
-        cshares = _drift_index(spark, sf_dir)
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-
-        def publish(bdf: DataFrame, batch_id: int) -> None:
-            _drift_tv_summary(bdf, cshares).select(
-                F.lit(batch_id).cast("long").alias("batch_id"), "*"
-            ).write.mode("overwrite").parquet(
-                os.path.join(seg_dir, f"seg_{batch_id}")
-            )
-
-        q = (
-            stream.writeStream.foreachBatch(publish)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-        return read_replay_segments(spark, seg_dir)
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(stage_dir, ignore_errors=True)

@@ -74,6 +74,7 @@ from pyspark.sql import functions as F
 
 from weather_analysis_bigdata__spark.registry import register
 from weather_analysis_bigdata__spark.sources.files import load_table
+from weather_analysis_bigdata__spark.streaming.replay import replay_segments
 from weather_analysis_bigdata__spark.functions.textops import (
     SQL_TOKENS,
     sql_word_ngrams,
@@ -937,48 +938,12 @@ def rerank_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_quality_gate_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    from weather_analysis_bigdata__spark.operators.index_store import (
-        read_replay_segments,
-        replay_segment_dir,
-    )
     from weather_analysis_bigdata__spark.queries_serving import _plm_table
 
-    run = uuid.uuid4().hex[:10]
-    src_dir = tempfile.mkdtemp(prefix=f"qualgate_src_{run}_")
-    # Segments outlive this function — the result IS their scan.
-    seg_dir = replay_segment_dir("qualgate_seg")
-    try:
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "source", "text"
-        )
-        schema = docs.schema
-        docs.repartition(4).write.mode("overwrite").parquet(src_dir)
-        lpt = _plm_table(spark, sf_dir)
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-
-        def publish(bdf: DataFrame, batch_id: int) -> None:
-            ensemble_decisions(bdf, lpt).write.mode("overwrite").parquet(
-                os.path.join(seg_dir, f"seg_{batch_id}")
-            )
-
-        q = (
-            stream.writeStream.foreachBatch(publish)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-        # Distributed scan of the published segments — no collect().
-        return read_replay_segments(spark, seg_dir)
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "text"
+    )
+    lpt = _plm_table(spark, sf_dir)
+    return replay_segments(
+        spark, docs, lambda bdf, _: ensemble_decisions(bdf, lpt), "qualgate"
+    )

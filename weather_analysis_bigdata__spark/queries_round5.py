@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from weather_analysis_bigdata__spark.registry import register
 from weather_analysis_bigdata__spark.session import pin
 from weather_analysis_bigdata__spark.sources.files import load_table
+from weather_analysis_bigdata__spark.streaming.replay import replay_segments
 
 # ---------------------------------------------------------------------------
 # Shared oracle CTEs: closed-form phash / audio fingerprint recomputation
@@ -1486,49 +1487,12 @@ def multimodal_video_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_multimodal_router_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    from weather_analysis_bigdata__spark.operators.index_store import (
-        read_replay_segments,
-        replay_segment_dir,
+    return replay_segments(
+        spark,
+        _router_batch_df(spark, sf_dir),
+        lambda bdf, _: _route_batch(spark, sf_dir, bdf),
+        "mmrouter",
     )
-
-    run = uuid.uuid4().hex[:10]
-    src_dir = tempfile.mkdtemp(prefix=f"mmrt_src_{run}_")
-    # Segments outlive this function — the result IS their scan (the
-    # round-6 replay_segment_dir pattern; this was the last replay that
-    # froze its output via collect()+createDataFrame).
-    seg_dir = replay_segment_dir("mmrouter_seg")
-    try:
-        batch = _router_batch_df(spark, sf_dir)
-        schema = batch.schema
-        batch.repartition(4).write.mode("overwrite").parquet(src_dir)
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-
-        def publish(batch_df: DataFrame, batch_id: int) -> None:
-            _route_batch(spark, sf_dir, batch_df).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(seg_dir, f"seg_{batch_id}"))
-
-        q = (
-            stream.writeStream.foreachBatch(publish)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-        # Distributed scan of the published segments — no collect().
-        return read_replay_segments(spark, seg_dir)
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

@@ -46,6 +46,7 @@ from weather_analysis_bigdata__spark.sources.files import (
     load_table,
     spread_small_scan,
 )
+from weather_analysis_bigdata__spark.streaming.replay import replay_segments
 
 # ---------------------------------------------------------------------------
 # Maximal-span exact substring dedup
@@ -905,65 +906,20 @@ def corpus_drift_gated_admission(
 def streaming_drift_gate_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    from weather_analysis_bigdata__spark.operators.index_store import (
-        read_replay_segments,
-        replay_segment_dir,
-    )
     from weather_analysis_bigdata__spark.queries_hygiene import (
         _drift_index,
         _paragraph_batch_slices,
         _paragraph_index,
     )
 
-    run = uuid.uuid4().hex[:10]
-    src_dir = tempfile.mkdtemp(prefix=f"driftgate_src_{run}_")
-    stage_dir = tempfile.mkdtemp(prefix=f"driftgate_stage_{run}_")
-    seg_dir = replay_segment_dir("driftgate_seg")
-    try:
-        slices = _paragraph_batch_slices(spark, sf_dir)
-        schema = slices[0].schema
-        for i, sl in enumerate(slices):
-            d = os.path.join(stage_dir, f"s{i}")
-            sl.coalesce(1).write.mode("overwrite").parquet(d)
-            part = next(
-                f
-                for f in os.listdir(d)
-                if f.startswith("part-") and f.endswith(".parquet")
-            )
-            dst = os.path.join(src_dir, f"{i:03d}.parquet")
-            shutil.copy(os.path.join(d, part), dst)
-            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-
-        cshares = _drift_index(spark, sf_dir)
-        pidx = _paragraph_index(spark, sf_dir)
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-
-        def publish(bdf: DataFrame, batch_id: int) -> None:
-            _admission_route(bdf, cshares, pidx, batch_id).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(seg_dir, f"seg_{batch_id}"))
-
-        q = (
-            stream.writeStream.foreachBatch(publish)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-        return read_replay_segments(spark, seg_dir)
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(stage_dir, ignore_errors=True)
+    cshares = _drift_index(spark, sf_dir)
+    pidx = _paragraph_index(spark, sf_dir)
+    return replay_segments(
+        spark,
+        _paragraph_batch_slices(spark, sf_dir),
+        lambda bdf, batch_id: _admission_route(bdf, cshares, pidx, batch_id),
+        "driftgate",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1158,49 +1114,17 @@ def dedup_span_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_span_dedup_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    from weather_analysis_bigdata__spark.operators.index_store import (
-        read_replay_segments,
-        replay_segment_dir,
-    )
     from weather_analysis_bigdata__spark.queries_hygiene import (
         _paragraph_batch,
     )
 
-    run = uuid.uuid4().hex[:10]
-    src_dir = tempfile.mkdtemp(prefix=f"spandedup_src_{run}_")
-    seg_dir = replay_segment_dir("spandedup_seg")
-    try:
-        batch = _paragraph_batch(spark, sf_dir)
-        schema = batch.schema
-        batch.repartition(4).write.mode("overwrite").parquet(src_dir)
-        idx = _span_postings_index(spark, sf_dir)
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-
-        def publish(bdf: DataFrame, batch_id: int) -> None:
-            _span_probe(bdf, idx).write.mode("overwrite").parquet(
-                os.path.join(seg_dir, f"seg_{batch_id}")
-            )
-
-        q = (
-            stream.writeStream.foreachBatch(publish)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-        return read_replay_segments(spark, seg_dir)
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
+    idx = _span_postings_index(spark, sf_dir)
+    return replay_segments(
+        spark,
+        _paragraph_batch(spark, sf_dir),
+        lambda bdf, _: _span_probe(bdf, idx),
+        "spandedup",
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -51,6 +51,7 @@ from weather_analysis_bigdata__spark.sources.files import (
     load_table,
     spread_small_scan,
 )
+from weather_analysis_bigdata__spark.streaming.replay import replay_segments
 
 # ---------------------------------------------------------------------------
 # Span-cap loss audit
@@ -1239,68 +1240,24 @@ def pack_interleaved_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_decontaminate_semantic_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    from weather_analysis_bigdata__spark.operators.index_store import (
-        read_replay_segments,
-        replay_segment_dir,
+    qset = _decon_qset(spark, sf_dir)
+    # 3 deterministic arrival slices (query_id mod), in slice order.
+    hits = replay_segments(
+        spark,
+        [
+            qset.filter((F.abs(F.col("query_id")) % 3).cast("int") == i)
+            for i in range(3)
+        ],
+        lambda bdf, _: _decon_hits(spark, sf_dir, bdf),
+        "decon",
     )
-
-    run = uuid.uuid4().hex[:10]
-    src_dir = tempfile.mkdtemp(prefix=f"decon_src_{run}_")
-    stage_dir = tempfile.mkdtemp(prefix=f"decon_stage_{run}_")
-    seg_dir = replay_segment_dir("decon_seg")
-    try:
-        qset = _decon_qset(spark, sf_dir)
-        schema = qset.schema
-        # 3 deterministic arrival slices (query_id mod), mtime-ordered.
-        for i in range(3):
-            sl = qset.filter(
-                (F.abs(F.col("query_id")) % 3).cast("int") == i
-            )
-            d = os.path.join(stage_dir, f"s{i}")
-            sl.coalesce(1).write.mode("overwrite").parquet(d)
-            part = next(
-                f
-                for f in os.listdir(d)
-                if f.startswith("part-") and f.endswith(".parquet")
-            )
-            dst = os.path.join(src_dir, f"{i:03d}.parquet")
-            shutil.copy(os.path.join(d, part), dst)
-            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-
-        def publish(bdf: DataFrame, batch_id: int) -> None:
-            _decon_hits(spark, sf_dir, bdf).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(seg_dir, f"seg_{batch_id}"))
-
-        q = (
-            stream.writeStream.foreachBatch(publish)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-        hits = read_replay_segments(spark, seg_dir)
-        sem = hits.groupBy(F.col("cand_id").alias("doc_id")).agg(
-            F.sum(F.when(F.col("cosine") >= _DECON_TAU, 1).otherwise(0))
-            .cast("long")
-            .alias("n_semantic_hits"),
-            F.max("cosine").alias("max_cosine"),
-        )
-        return _decon_report(spark, sf_dir, sem)
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(stage_dir, ignore_errors=True)
+    sem = hits.groupBy(F.col("cand_id").alias("doc_id")).agg(
+        F.sum(F.when(F.col("cosine") >= _DECON_TAU, 1).otherwise(0))
+        .cast("long")
+        .alias("n_semantic_hits"),
+        F.max("cosine").alias("max_cosine"),
+    )
+    return _decon_report(spark, sf_dir, sem)
 
 
 # ---------------------------------------------------------------------------

@@ -50,6 +50,7 @@ from weather_analysis_bigdata__spark.functions.vectorops import scaled_vec
 from weather_analysis_bigdata__spark.registry import register
 from weather_analysis_bigdata__spark.session import pin
 from weather_analysis_bigdata__spark.sources.files import load_table
+from weather_analysis_bigdata__spark.streaming.replay import replay_segments
 
 # ---------------------------------------------------------------------------
 # t-closeness audit (sensitive-distribution distance per QI class)
@@ -959,62 +960,16 @@ def _pca_replay_oracle() -> str:
 def streaming_embedding_pca_score_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    from weather_analysis_bigdata__spark.operators.index_store import (
-        read_replay_segments,
-        replay_segment_dir,
+    sq = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", _pca_qa_col().alias("qa")
     )
-
-    run = uuid.uuid4().hex[:10]
-    src_dir = tempfile.mkdtemp(prefix=f"pcascore_src_{run}_")
-    stage_dir = tempfile.mkdtemp(prefix=f"pcascore_stage_{run}_")
-    seg_dir = replay_segment_dir("pcascore_seg")
-    try:
-        sq = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", _pca_qa_col().alias("qa")
-        )
-        schema = sq.schema
-        lv = _pca_component_lv(spark, sf_dir)
-        for i in range(3):
-            sl = sq.filter((F.col("vec_id") % 3).cast("int") == i)
-            d = os.path.join(stage_dir, f"s{i}")
-            sl.coalesce(1).write.mode("overwrite").parquet(d)
-            part = next(
-                f
-                for f in os.listdir(d)
-                if f.startswith("part-") and f.endswith(".parquet")
-            )
-            dst = os.path.join(src_dir, f"{i:03d}.parquet")
-            shutil.copy(os.path.join(d, part), dst)
-            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-
-        def publish(bdf: DataFrame, batch_id: int) -> None:
-            _pca_score_kernel(bdf, lv).write.mode("overwrite").parquet(
-                os.path.join(seg_dir, f"seg_{batch_id}")
-            )
-
-        q = (
-            stream.writeStream.foreachBatch(publish)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return read_replay_segments(spark, seg_dir).select(
-            "vec_id", "proj_q", "cos2_ppm", "axis_aligned"
-        )
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(stage_dir, ignore_errors=True)
+    lv = _pca_component_lv(spark, sf_dir)
+    return replay_segments(
+        spark,
+        [sq.filter((F.col("vec_id") % 3).cast("int") == i) for i in range(3)],
+        lambda bdf, _: _pca_score_kernel(bdf, lv),
+        "pcascore",
+    ).select("vec_id", "proj_q", "cos2_ppm", "axis_aligned")
 
 
 # ---------------------------------------------------------------------------

@@ -42,6 +42,7 @@ from weather_analysis_bigdata__spark.queries_llmops import (
 from weather_analysis_bigdata__spark.registry import register
 from weather_analysis_bigdata__spark.session import pin, pin_lazy
 from weather_analysis_bigdata__spark.sources.files import load_table
+from weather_analysis_bigdata__spark.streaming.replay import replay_segments
 
 # ---------------------------------------------------------------------------
 # CC transitive over-merge audit
@@ -1282,64 +1283,21 @@ def dedup_cc_recluster_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_cc_incremental_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    from weather_analysis_bigdata__spark.operators.index_store import (
-        read_replay_segments,
-        replay_segment_dir,
+    batch = _cci_batch_df(spark, sf_dir)
+    bands = (
+        (5_000_000, 6_000_000),
+        (6_000_000, 7_000_000),
+        (7_000_000, 9_000_000),
     )
-
-    run = uuid.uuid4().hex[:10]
-    src_dir = tempfile.mkdtemp(prefix=f"cci_src_{run}_")
-    stage_dir = tempfile.mkdtemp(prefix=f"cci_stage_{run}_")
-    seg_dir = replay_segment_dir("cci_seg")
-    try:
-        batch = _cci_batch_df(spark, sf_dir)
-        schema = batch.schema
-        bands = (
-            (5_000_000, 6_000_000),
-            (6_000_000, 7_000_000),
-            (7_000_000, 9_000_000),
-        )
-        for i, (lo, hi) in enumerate(bands):
-            sl = batch.filter(
-                (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-            )
-            d = os.path.join(stage_dir, f"s{i}")
-            sl.coalesce(1).write.mode("overwrite").parquet(d)
-            part = next(
-                f
-                for f in os.listdir(d)
-                if f.startswith("part-") and f.endswith(".parquet")
-            )
-            dst = os.path.join(src_dir, f"{i:03d}.parquet")
-            shutil.copy(os.path.join(d, part), dst)
-            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-
-        def publish(bdf: DataFrame, batch_id: int) -> None:
-            _cci_assign(spark, sf_dir, bdf).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(seg_dir, f"seg_{batch_id}"))
-
-        q = (
-            stream.writeStream.foreachBatch(publish)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return read_replay_segments(spark, seg_dir)
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(stage_dir, ignore_errors=True)
+    return replay_segments(
+        spark,
+        [
+            batch.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+            for lo, hi in bands
+        ],
+        lambda bdf, _: _cci_assign(spark, sf_dir, bdf),
+        "cci",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1369,15 +1327,6 @@ def streaming_cc_incremental_replay(
 def streaming_embedding_pca_update_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    from weather_analysis_bigdata__spark.operators.index_store import (
-        read_replay_segments,
-        replay_segment_dir,
-    )
     from weather_analysis_bigdata__spark.queries_round8b import (
         _PCA_DIM,
         _moment_rows_df,
@@ -1385,109 +1334,65 @@ def streaming_embedding_pca_update_replay(
         _pca_qa_col,
     )
 
-    run = uuid.uuid4().hex[:10]
-    src_dir = tempfile.mkdtemp(prefix=f"pcau_src_{run}_")
-    stage_dir = tempfile.mkdtemp(prefix=f"pcau_stage_{run}_")
-    seg_dir = replay_segment_dir("pcau_seg")
-    try:
-        delta = (
-            load_table(spark, sf_dir, "embeddings")
-            .filter(F.expr(_PCA_UP_DELTA))
-            .select("vec_id", "embedding")
-        )
-        schema = delta.schema
-        # 3 deterministic arrival slices, mtime-ordered.
-        for i in range(3):
-            sl = delta.filter((F.col("vec_id") % 15).cast("int") % 3 == i)
-            d = os.path.join(stage_dir, f"s{i}")
-            sl.coalesce(1).write.mode("overwrite").parquet(d)
-            part = next(
-                f
-                for f in os.listdir(d)
-                if f.startswith("part-") and f.endswith(".parquet")
-            )
-            dst = os.path.join(src_dir, f"{i:03d}.parquet")
-            shutil.copy(os.path.join(d, part), dst)
-            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+    delta = (
+        load_table(spark, sf_dir, "embeddings")
+        .filter(F.expr(_PCA_UP_DELTA))
+        .select("vec_id", "embedding")
+    )
+    # 3 deterministic arrival slices, in slice order.
+    segments = replay_segments(
+        spark,
+        [
+            delta.filter((F.col("vec_id") % 15).cast("int") % 3 == i)
+            for i in range(3)
+        ],
+        lambda bdf, _: _moment_rows_df(bdf.select(_pca_qa_col().alias("qa"))),
+        "pcau",
+    )
 
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-
-        def publish(bdf: DataFrame, batch_id: int) -> None:
-            sv = bdf.select(_pca_qa_col().alias("qa"))
-            _moment_rows_df(sv).write.mode("overwrite").parquet(
-                os.path.join(seg_dir, f"seg_{batch_id}")
-            )
-
-        q = (
-            stream.writeStream.foreachBatch(publish)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-        d = _PCA_DIM
-        # Segment sum = the delta moments (integer addition, order-free).
-        gram_d = [[0] * d for _ in range(d)]
-        s_d = [0] * d
-        n_d = 0
-        folded = (
-            read_replay_segments(spark, seg_dir)
-            .groupBy("i", "j")
-            .agg(F.sum("m").alias("m"))
-            .collect()
-        )
-        for r in folded:
-            if r["i"] == -1:
-                n_d = r["m"]
-            elif r["j"] == -1:
-                s_d[r["i"]] = r["m"]
-            else:
-                gram_d[r["i"]][r["j"]] = r["m"]
-                gram_d[r["j"]][r["i"]] = r["m"]
-        gram_b = [[0] * d for _ in range(d)]
-        s_b = [0] * d
-        n_b = 0
-        for r in _pca_base_moment_index(spark, sf_dir).collect():
-            if r["i"] == -1:
-                n_b = r["m"]
-            elif r["j"] == -1:
-                s_b[r["i"]] = r["m"]
-            else:
-                gram_b[r["i"]][r["j"]] = r["m"]
-                gram_b[r["j"]][r["i"]] = r["m"]
-        gram = [
-            [gram_b[i][j] + gram_d[i][j] for j in range(d)]
-            for i in range(d)
+    d = _PCA_DIM
+    # Segment sum = the delta moments (integer addition, order-free).
+    gram_d = [[0] * d for _ in range(d)]
+    s_d = [0] * d
+    n_d = 0
+    folded = segments.groupBy("i", "j").agg(F.sum("m").alias("m")).collect()
+    for r in folded:
+        if r["i"] == -1:
+            n_d = r["m"]
+        elif r["j"] == -1:
+            s_d[r["i"]] = r["m"]
+        else:
+            gram_d[r["i"]][r["j"]] = r["m"]
+            gram_d[r["j"]][r["i"]] = r["m"]
+    gram_b = [[0] * d for _ in range(d)]
+    s_b = [0] * d
+    n_b = 0
+    for r in _pca_base_moment_index(spark, sf_dir).collect():
+        if r["i"] == -1:
+            n_b = r["m"]
+        elif r["j"] == -1:
+            s_b[r["i"]] = r["m"]
+        else:
+            gram_b[r["i"]][r["j"]] = r["m"]
+            gram_b[r["j"]][r["i"]] = r["m"]
+    gram = [[gram_b[i][j] + gram_d[i][j] for j in range(d)] for i in range(d)]
+    s = [s_b[i] + s_d[i] for i in range(d)]
+    n = n_b + n_d
+    new_v, lam_q, var_ppm, _k = _pca_power_solve(gram, s, n)
+    old_v, _, _, _ = _pca_power_solve(gram_b, s_b, n_b)
+    num = sum(a * b for a, b in zip(old_v, new_v))
+    den = max(1, sum(a * a for a in old_v) * sum(b * b for b in new_v))
+    drift = (1_000_000 * num * num) // den
+    schema_out = T.StructType(
+        [
+            T.StructField("pos", T.LongType()),
+            T.StructField("loading_q", T.LongType()),
+            T.StructField("eigenvalue_q", T.LongType()),
+            T.StructField("var_explained_ppm", T.LongType()),
+            T.StructField("n_vectors", T.LongType()),
+            T.StructField("n_delta", T.LongType()),
+            T.StructField("drift_cos2_ppm", T.LongType()),
         ]
-        s = [s_b[i] + s_d[i] for i in range(d)]
-        n = n_b + n_d
-        new_v, lam_q, var_ppm, _k = _pca_power_solve(gram, s, n)
-        old_v, _, _, _ = _pca_power_solve(gram_b, s_b, n_b)
-        num = sum(a * b for a, b in zip(old_v, new_v))
-        den = max(
-            1, sum(a * a for a in old_v) * sum(b * b for b in new_v)
-        )
-        drift = (1_000_000 * num * num) // den
-        schema_out = T.StructType(
-            [
-                T.StructField("pos", T.LongType()),
-                T.StructField("loading_q", T.LongType()),
-                T.StructField("eigenvalue_q", T.LongType()),
-                T.StructField("var_explained_ppm", T.LongType()),
-                T.StructField("n_vectors", T.LongType()),
-                T.StructField("n_delta", T.LongType()),
-                T.StructField("drift_cos2_ppm", T.LongType()),
-            ]
-        )
-        rows = [
-            (pos, new_v[pos], lam_q, var_ppm, n, n_d, drift)
-            for pos in range(d)
-        ]
-        return spark.createDataFrame(rows, schema_out)
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(stage_dir, ignore_errors=True)
+    )
+    rows = [(pos, new_v[pos], lam_q, var_ppm, n, n_d, drift) for pos in range(d)]
+    return spark.createDataFrame(rows, schema_out)

@@ -100,6 +100,7 @@ from weather_analysis_bigdata__spark.queries_round5 import (
 )
 from weather_analysis_bigdata__spark.registry import register
 from weather_analysis_bigdata__spark.sources.files import load_table
+from weather_analysis_bigdata__spark.streaming.replay import replay_segments
 
 _R_REFINE = 30  # ADC shortlist size re-scored exactly (3× the final k)
 
@@ -1326,100 +1327,62 @@ def _stride_schedule(d: DataFrame) -> DataFrame:
     prepare=_prepare_ivf,
 )
 def streaming_ann_serve_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    from weather_analysis_bigdata__spark.operators.index_store import (
-        read_replay_segments,
+    queries = (
+        load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") < _IVF_QUERIES)
+        .select("vec_id", "embedding")
+    )
+    cent_arr = _ivf_centroids(spark, sf_dir)
+    assign = _ivf_assign(spark, sf_dir)
+    sv = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", scaled_vec("embedding").alias("sva")
     )
 
-    run = uuid.uuid4().hex[:10]
-    src_dir = tempfile.mkdtemp(prefix=f"annserve_src_{run}_")
-    seg_dir = tempfile.mkdtemp(prefix=f"annserve_seg_{run}_")
-    try:
-        queries = (
-            load_table(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id") < _IVF_QUERIES)
-            .select("vec_id", "embedding")
+    def serve(batch_df: DataFrame, _batch_id: int) -> DataFrame:
+        q = batch_df.select(
+            F.col("vec_id").alias("query_id"),
+            scaled_vec("embedding").alias("q_sva"),
         )
-        schema = queries.schema
-        queries.repartition(4).write.mode("overwrite").parquet(src_dir)
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
+        probe_scores = q.crossJoin(F.broadcast(cent_arr)).select(
+            "query_id",
+            "c_label",
+            _sqdist_col(F.col("q_sva"), F.col("c_arr")).alias("dist"),
         )
-        cent_arr = _ivf_centroids(spark, sf_dir)
-        assign = _ivf_assign(spark, sf_dir)
-        sv = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", scaled_vec("embedding").alias("sva")
+        probes = grouped_topk(
+            probe_scores,
+            ["query_id"],
+            [F.col("dist"), F.col("c_label")],
+            _IVF_PROBES,
+        ).select("query_id", F.col("c_label").alias("probe_label"))
+        cands = (
+            F.broadcast(probes)
+            .join(assign, F.col("probe_label") == F.col("part_label"))
+            .filter(F.col("cand_id") != F.col("query_id"))
+            .select("query_id", "cand_id")
         )
-
-        def serve(batch_df: DataFrame, batch_id: int) -> None:
-            q = batch_df.select(
-                F.col("vec_id").alias("query_id"),
-                scaled_vec("embedding").alias("q_sva"),
-            )
-            probe_scores = q.crossJoin(F.broadcast(cent_arr)).select(
-                "query_id",
-                "c_label",
-                _sqdist_col(F.col("q_sva"), F.col("c_arr")).alias("dist"),
-            )
-            probes = grouped_topk(
-                probe_scores,
-                ["query_id"],
-                [F.col("dist"), F.col("c_label")],
-                _IVF_PROBES,
-            ).select("query_id", F.col("c_label").alias("probe_label"))
-            cands = (
-                F.broadcast(probes)
-                .join(assign, F.col("probe_label") == F.col("part_label"))
-                .filter(F.col("cand_id") != F.col("query_id"))
-                .select("query_id", "cand_id")
-            )
-            pair = (
-                cands.join(sv, F.col("cand_id") == F.col("vec_id"))
-                .join(F.broadcast(q), "query_id")
-                .select(
-                    "query_id",
-                    "cand_id",
-                    _sqdist_col(F.col("q_sva"), F.col("sva")).alias("dist"),
-                )
-            )
-            grouped_topk(
-                pair,
-                ["query_id"],
-                [F.col("dist"), F.col("cand_id")],
-                _IVF_TOPK,
-                rank_col="rn",
-            ).select("query_id", "cand_id", "dist", "rn").write.mode(
-                "overwrite"
-            ).parquet(os.path.join(seg_dir, f"seg_{batch_id}"))
-
-        sq = (
-            stream.writeStream.foreachBatch(serve)
-            .trigger(availableNow=True)
-            .start()
-        )
-        sq.awaitTermination()
-        rows = (
-            read_replay_segments(spark, seg_dir)
+        pair = (
+            cands.join(sv, F.col("cand_id") == F.col("vec_id"))
+            .join(F.broadcast(q), "query_id")
             .select(
                 "query_id",
-                F.col("cand_id").alias("neighbor_id"),
-                (F.col("dist").cast("double") / 1e16).alias("sq_dist"),
-                F.col("rn").cast("long").alias("rn"),
+                "cand_id",
+                _sqdist_col(F.col("q_sva"), F.col("sva")).alias("dist"),
             )
-            .collect()
         )
-        return spark.createDataFrame(
-            rows, "query_id long, neighbor_id long, sq_dist double, rn long"
-        )
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(seg_dir, ignore_errors=True)
+        return grouped_topk(
+            pair,
+            ["query_id"],
+            [F.col("dist"), F.col("cand_id")],
+            _IVF_TOPK,
+            rank_col="rn",
+        ).select("query_id", "cand_id", "dist", "rn")
+
+    return replay_segments(spark, queries, serve, "annserve").select(
+        "query_id",
+        F.col("cand_id").alias("neighbor_id"),
+        (F.col("dist").cast("double") / 1e16).alias("sq_dist"),
+        F.col("rn").cast("long").alias("rn"),
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -1,7 +1,7 @@
 """Streaming queries exposed through the driver contract.
 
 ``streaming_tumbling_replay`` actually runs the Structured Streaming
-engine (readStream → watermark → window agg → availableNow trigger →
+engine (parquet stream → watermark → window agg → availableNow trigger →
 memory sink) and returns the final state; its oracle is plain batch SQL
 — passing proves stream/batch equivalence, the fundamental streaming
 correctness property.
@@ -28,14 +28,23 @@ from weather_analysis_bigdata__spark.registry import register
     """,
     doc="Watermarked tumbling-window aggregation executed by the "
     "Structured Streaming engine (availableNow replay of the events "
-    "parquet through readStream → memory sink), checked against batch "
+    "parquet through a file stream → memory sink), checked against batch "
     "SQL — stream/batch equivalence is the correctness gate. See "
     "streaming/windows.py for the watermark/state design.",
 )
 def streaming_tumbling_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from weather_analysis_bigdata__spark.streaming.windows import replay_to_memory
+    from weather_analysis_bigdata__spark.streaming.windows import (
+        replay_build_to_memory,
+        tumbling_agg,
+        tumbling_agg_schema,
+    )
 
-    return replay_to_memory(spark, os.path.join(sf_dir, "events.parquet"))
+    return replay_build_to_memory(
+        spark,
+        os.path.join(sf_dir, "events.parquet"),
+        tumbling_agg,
+        tumbling_agg_schema(),
+    )
 
 
 @register(
@@ -606,14 +615,6 @@ def _sql_band_summary() -> str:
     "index the probe side scans.",
 )
 def streaming_minhash_index_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid
-
-    from weather_analysis_bigdata__spark.operators.index_store import (
-        read_replay_segments,
-    )
-
     from pyspark.sql import functions as F
 
     from weather_analysis_bigdata__spark.functions.textops import (
@@ -622,67 +623,33 @@ def streaming_minhash_index_replay(spark: SparkSession, sf_dir: str) -> DataFram
     )
     from weather_analysis_bigdata__spark.queries_llmops import _minhash_bands
     from weather_analysis_bigdata__spark.sources.files import load_table
+    from weather_analysis_bigdata__spark.streaming.replay import (
+        replay_segments,
+    )
 
-    run = uuid.uuid4().hex[:10]
-    src_dir = tempfile.mkdtemp(prefix=f"mhidx_src_{run}_")
-    seg_dir = tempfile.mkdtemp(prefix=f"mhidx_seg_{run}_")
-    try:
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        schema = docs.schema
-        docs.repartition(4).write.mode("overwrite").parquet(src_dir)
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-
-        def publish(batch_df: DataFrame, batch_id: int) -> None:
-            # Segment publish: overwrite into a batch_id-keyed dir —
-            # deterministic per batch, so redelivery is idempotent.
-            _minhash_bands(batch_df).select(
-                "doc_id", "band_id", "band_key"
-            ).write.mode("overwrite").parquet(
-                os.path.join(seg_dir, f"seg_{batch_id}")
-            )
-
-        q = (
-            stream.writeStream.foreachBatch(publish)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-        built = read_replay_segments(spark, seg_dir)
-        item = (
-            hex15_to_long(
-                md5s(
-                    F.concat_ws(
-                        ":",
-                        F.col("doc_id").cast("string"),
-                        F.col("band_id").cast("string"),
-                        F.col("band_key"),
-                    )
+    built = replay_segments(
+        spark,
+        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
+        lambda bdf, _: _minhash_bands(bdf).select(
+            "doc_id", "band_id", "band_key"
+        ),
+        "mhidx",
+    )
+    item = (
+        hex15_to_long(
+            md5s(
+                F.concat_ws(
+                    ":",
+                    F.col("doc_id").cast("string"),
+                    F.col("band_id").cast("string"),
+                    F.col("band_key"),
                 )
             )
-            % F.lit(1099511627776)
         )
-        rows = (
-            built.groupBy(F.col("band_id").cast("long").alias("band_id"))
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.countDistinct("band_key").cast("long").alias(
-                    "n_distinct_keys"
-                ),
-                F.sum(item).cast("long").alias("key_checksum"),
-            )
-            .collect()
-        )
-        return spark.createDataFrame(
-            rows,
-            "band_id long, n_docs long, n_distinct_keys long, "
-            "key_checksum long",
-        )
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(seg_dir, ignore_errors=True)
+        % F.lit(1099511627776)
+    )
+    return built.groupBy(F.col("band_id").cast("long").alias("band_id")).agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.countDistinct("band_key").cast("long").alias("n_distinct_keys"),
+        F.sum(item).cast("long").alias("key_checksum"),
+    )

@@ -54,10 +54,6 @@ def _one_minus_disc() -> F.Column:
     return F.lit(1) - dec("l_discount", 2, 4)
 
 
-def _one_plus_tax() -> F.Column:
-    return F.lit(1) + dec("l_tax", 2, 4)
-
-
 _SQL_PRICE = "CAST(l_extendedprice AS DECIMAL(12,2))"
 _SQL_ONE_MINUS_DISC = "(1 - CAST(l_discount AS DECIMAL(4,2)))"
 _SQL_ONE_PLUS_TAX = "(1 + CAST(l_tax AS DECIMAL(4,2)))"

@@ -24,6 +24,11 @@ tests/test_streaming_state_ttl.py):
   count while ``numRowsRemoved`` > 0 — i.e. the store provably evicts
   rather than accumulates. At 100 TB/day this bound is the difference
   between a fixed-size state store and an OOM three days in.
+- **Segment replays share one harness.** Every foreachBatch replay
+  whose result is a scan of per-micro-batch segments runs through
+  ``streaming/replay.py: replay_segments`` (stage → availableNow
+  stream → ``seg_{batch_id}`` publish → lazy segment scan); a replay
+  supplies only its per-batch kernel.
 - **End-of-stream flush.** availableNow replays die with the input, so
   outer joins/final windows flush via far-future sentinel rows (see
   streaming/joins.py) — the file-replay analogue of a Kafka end marker.

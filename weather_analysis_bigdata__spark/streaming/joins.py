@@ -22,11 +22,10 @@ join against the batch self-join SQL, the dedup against batch DISTINCT.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from weather_analysis_bigdata__spark.streaming.replay import place_slice, stage_slice
 from weather_analysis_bigdata__spark.streaming.windows import as_stream_dir, stream_events
 from weather_analysis_bigdata__spark.session import pin_ephemeral
 
@@ -216,9 +215,7 @@ def _interval_outer_join_replay(
     run_id = uuid.uuid4().hex[:10]
     src_dir = tempfile.mkdtemp(prefix=f"ssloj_{run_id}_")
     name = f"ssloj_{run_id}"
-    dst0 = os.path.join(src_dir, "000.parquet")
-    shutil.copy(events_parquet, dst0)
-    os.utime(dst0, (1_700_000_000, 1_700_000_000))
+    place_slice(events_parquet, src_dir, 0)
 
     # Conf must precede the probe read: a TIMESTAMP(NANOS) drop throws
     # PARQUET_TYPE_ILLEGAL on a fresh session otherwise (mirror
@@ -246,14 +243,10 @@ def _interval_outer_join_replay(
         else:
             sent_ts = mx + datetime.timedelta(days=days)
         sent_rows.append((10**12 + i, sent_ts, -1, etype, 0.0, "{}"))
-    sent = spark.createDataFrame(sent_rows, schema=sent_schema)
-    stage = os.path.join(src_dir, "stage")
-    sent.coalesce(1).write.parquet(stage)
-    part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-    dst = os.path.join(src_dir, "001.parquet")
-    shutil.copy(os.path.join(stage, part), dst)
-    os.utime(dst, (1_700_000_100,) * 2)
-    shutil.rmtree(stage, ignore_errors=True)
+    # the events are slice 0, the sentinel file slice 1
+    stage_slice(
+        spark.createDataFrame(sent_rows, schema=sent_schema), src_dir, 1
+    )
 
     base = stream_events(spark, src_dir, max_files_per_trigger=1)
     clicks = (

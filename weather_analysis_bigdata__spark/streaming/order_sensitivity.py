@@ -19,9 +19,11 @@ Classes
 
     - ``doc-local kernel + static index``: foreachBatch applies a
       per-record function of (record, persisted index) and publishes
-      batch_id-keyed segments; the registered result is a scan/agg of
-      the segment UNION, and unions commute. Which batch carried a
-      record changes segment file layout, never the result rows.
+      batch_id-keyed segments through the shared harness
+      ``streaming/replay.py: replay_segments``; the registered result
+      is a scan/agg of the segment UNION, and unions commute. Which
+      batch carried a record changes segment file layout, never the
+      result rows.
     - ``additive state``: the folded state is a commutative monoid
       (integer/decimal sums, counts, moment matrices), so any arrival
       order folds to the same total.
@@ -46,7 +48,8 @@ Classes
     row CONTENT per slice is still order-free (doc-local kernel), but
     permuting delivery permutes the batch_id labels, so the replay
     pins delivery order with explicit distinct file mtimes
-    (FileStreamSource orders by modification time). A production
+    (FileStreamSource orders by modification time; ``replay_segments``
+    stages a list of slices that way, slice i → batch i). A production
     deployment derives batch identity from source offsets, which are
     order-authoritative by construction.
 
@@ -80,11 +83,13 @@ def _free(why: str, enforced_by: str) -> dict:
 
 
 def _seg(kernel: str, enforced_by: str) -> dict:
-    """The doc-local-kernel + static-index foreachBatch segment shape."""
+    """The doc-local-kernel + static-index foreachBatch segment shape
+    (``streaming/replay.py: replay_segments``)."""
     return _free(
-        f"doc-local kernel ({kernel}) against a PERSISTED index; "
-        "batch_id-keyed segments, result = segment union — unions "
-        "commute, so any delivery permutation yields the same rows",
+        f"doc-local kernel ({kernel}) against a PERSISTED index, "
+        "replayed by replay_segments; batch_id-keyed segments, result "
+        "= segment union — unions commute, so any delivery "
+        "permutation yields the same rows",
         enforced_by,
     )
 

@@ -4,8 +4,8 @@ The reference has no streaming surface (SURVEY.md §2.8) — this is the
 engine's net-new streaming story: ``readStream`` → watermarked
 event-time window aggregation → sink, with the *same aggregation
 expressions* as the batch query ``events_tumbling_1h`` so stream and
-batch replay provably agree (tested via the memory-sink harness below;
-registered as ``streaming_tumbling_replay``).
+batch replay provably agree (tested via the memory-sink harness
+``replay_build_to_memory``; registered as ``streaming_tumbling_replay``).
 
 Scale notes: state is keyed by (window, event_type) — bounded by the
 watermark horizon × type cardinality, independent of input volume.
@@ -97,39 +97,6 @@ def tumbling_agg(events: DataFrame, width: str = "1 hour", watermark: str = "2 h
             "sum_value",
         )
     )
-
-
-def replay_to_memory(
-    spark: SparkSession, events_parquet: str, width: str = "1 hour"
-) -> DataFrame:
-    """Replay a parquet events file through the *streaming* engine and
-    return the final aggregate state as a batch DataFrame.
-
-    Harness: copy the file into a fresh stream source dir, run the
-    watermarked tumbling aggregation with an ``availableNow`` trigger
-    into a complete-mode memory sink, await termination, read the table
-    back. The result must equal the batch aggregation bit-for-bit —
-    that equivalence is the streaming correctness gate.
-    """
-    run_id = uuid.uuid4().hex[:12]
-    src_dir = tempfile.mkdtemp(prefix=f"events_stream_{run_id}_")
-    sink = f"stream_replay_{run_id}"
-    try:
-        shutil.copy(events_parquet, os.path.join(src_dir, "part-000.parquet"))
-        agg = tumbling_agg(stream_events(spark, src_dir), width=width)
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # Materialize before the temp dir disappears.
-        rows = spark.table(sink).collect()
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
-    return spark.createDataFrame(rows, schema=tumbling_agg_schema())
 
 
 def tumbling_agg_schema() -> T.StructType:
